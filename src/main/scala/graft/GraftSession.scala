@@ -63,15 +63,6 @@ object GraftSession {
     val sess = batch.sparkSession
     if (!isTuningOverridden("spark.sql.adaptive.enabled"))
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-    // the body's per-batch index reads list slice trees bounded by the
-    // compaction contract (≤ maxIndexSlices × bucket fan-out ≈ 512 dirs):
-    // Spark's default 32-path threshold launched a parallel-listing JOB for
-    // every such read — 9 jobs per cold d11 gate, pure fixed cost. Listing
-    // a few hundred bounded paths on the driver is strictly cheaper; data-
-    // scale directories (store versions with thousands of files) still
-    // exceed the raised threshold and keep the distributed listing.
-    if (!isTuningOverridden("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-      sess.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     // mark the clone as a stream-body session: batch operators that learn
     // their trigger's cardinality may size per-batch tuning (shuffle width)
     // on it — batches are sequential per query and the clone is never a
@@ -132,6 +123,16 @@ object GraftSession {
     // runtime skew-join splitting: hot keys (one pod flooding logs, one
     // boilerplate shingle) re-plan into split partitions at execution time
     setTuningDefault(spark, "spark.sql.adaptive.skewJoin.enabled", "true")
+    // Spark lists more than 32 paths with a parallel-listing JOB. A CRI
+    // glob over one node's pod logs (52 leaf files in the bench corpus)
+    // and a stream body's index read (slice trees bounded by the
+    // compaction contract, ≤ maxIndexSlices × bucket fan-out ≈ 512 dirs)
+    // both crossed that: a 51-task job before the first byte is read,
+    // 0.1–0.7 s warm and ~4 s cold, against milliseconds of driver-side
+    // listing. Data-scale listings (store versions with thousands of
+    // files) still exceed 1024 and keep the distributed listing. Stream
+    // sessions are clones of this one and inherit the value.
+    setTuningDefault(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     GraftExtensions.register(spark)
     // metadata-only aggregates over format("graft") relations — runtime-
     // injectable (experimental methods), so driver-owned sessions get the

@@ -107,21 +107,31 @@ object AppendCommit {
       scanned
     }
 
-  /** Staged row count, empty-safe: a ZERO-ROW batch (an idle micro-batch,
-    * a filtered-out partition) stages only `_SUCCESS` — `spark.read
-    * .parquet` on that dir fails schema inference, so probe for data files
-    * first (a recursive metadata walk over the just-written staging tree)
-    * and only open footers when some exist.
+  /** The staged batch after its one footer pass: row count plus per-file
+    * stats lines keyed like the snapshot's composite entries.
     */
-  private def countStaged(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, stagingPath: Path): Long = {
-    def anyDataFile(p: Path): Boolean =
-      fs.listStatus(p).exists { s =>
-        Compaction.visible(s.getPath.getName) &&
-          (if (s.isDirectory) anyDataFile(s.getPath) else true)
-      }
-    if (!anyDataFile(stagingPath)) 0L
-    else spark.read.parquet(stagingPath.toString).count() // footer-only
+  private final case class Staged(rows: Long, stats: Map[String, FileStats.FileStat])
+
+  /** Footer-read the just-staged files ONCE: the stats lines the commit
+    * writes into the next version's sidecar, and their row sum as the
+    * staged count (Delta's write-time stats). Reading them again at
+    * publish — a schema-inferring `spark.read.parquet(staging).count()`
+    * plus the sidecar refresh — was 3–4 jobs of pure re-reading per
+    * commit. The verify stays independent: this count comes from the
+    * staging LISTING, the snapshot total from the manifest+listing
+    * composite, so a lost or doubled manifest entry still flips the sum.
+    * A ZERO-ROW batch (an idle micro-batch, a filtered-out partition)
+    * stages no data file and opens no footer. A file whose footer does
+    * not read gets no line; then the count falls back to the old read,
+    * which fails the commit on a truly corrupt file.
+    */
+  private def footStaged(spark: SparkSession, stagingDir: String): Staged = {
+    val entries = FileStats.listDirEntries(spark, stagingDir)
+    val stats = FileStats.collect(spark, entries.map(e => (e.key, e.physical, e.len)))
+    val rows =
+      if (stats.length == entries.length) stats.iterator.map(_.rows).sum
+      else spark.read.parquet(stagingDir).count()
+    Staged(rows, stats.map(s => (s.key, s)).toMap)
   }
 
   /** Stage the batch under `stagingDir` with the store's physical write
@@ -159,7 +169,8 @@ object AppendCommit {
       fs.delete(stagingPath, true)
     }
     stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    val stagedRows = countStaged(spark, fs, stagingPath)
+    val staged = footStaged(spark, stagingDir)
+    val stagedRows = staged.rows
     if (stagedRows == 0L) {
       fs.delete(stagingPath, true)
       return Committed(GraftStore.currentVersion(spark, root), 0L, replayed = false)
@@ -202,17 +213,18 @@ object AppendCommit {
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("append",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
         System.currentTimeMillis()))
-      // per-file pruning stats, O(delta): carried files reuse the
-      // predecessor's lines by (key, len); only the staged files are
-      // footer-read. Written pre-flip so stats publish atomically with the
-      // snapshot — and BEFORE the verify below, which they accelerate.
+      // per-file pruning stats with ZERO footer reads: carried files reuse
+      // the predecessor's lines and staged files the lines of the staging
+      // pass, both by (key, len). Written pre-flip so stats publish
+      // atomically with the snapshot — and BEFORE the verify below, which
+      // they accelerate.
       val nextEntries = GraftStore.compositeEntries(spark, root, next)
       // deletion vectors ride the carry: every predecessor file is still in
       // the snapshot, so the sidecar carries whole (staged files are new and
       // vector-free by construction)
       DeleteVectors.carryInto(spark, curDir, nextDir, nextEntries.map(_.key).toSet)
       FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, curDir))
+        FileStats.read(spark, curDir) ++ staged.stats)
       if (verifyCounts) {
         // counts from the stats sidecar when it fully covers the snapshot
         // (metadata-object reads), falling back to footer counting — the
@@ -268,7 +280,8 @@ object AppendCommit {
     // staging siblings are consumed at publish; a survivor is debris
     if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
     stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    val stagedRows = countStaged(spark, fs, stagingPath)
+    val staged = footStaged(spark, stagingDir)
+    val stagedRows = staged.rows
     if (stagedRows == 0L) {
       fs.delete(stagingPath, true)
       return Committed(VersionedStore.currentVersion(local), 0L, replayed = false)
@@ -306,13 +319,13 @@ object AppendCommit {
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("append",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
         System.currentTimeMillis()))
-      // O(delta) stats: hard-linked files keep their rel key+len and reuse
-      // the predecessor's lines; only the staged files are footer-read.
+      // stats with zero footer reads: hard-linked files keep their rel
+      // key+len and reuse the predecessor's lines or the staging pass's.
       // Written BEFORE the verify below, which they accelerate.
       val nextEntries = GraftStore.compositeEntries(spark, local, next)
       DeleteVectors.carryInto(spark, prevDir, nextDir, nextEntries.map(_.key).toSet)
       FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, prevDir))
+        FileStats.read(spark, prevDir) ++ staged.stats)
       if (verifyCounts) {
         val prevRows = // empty fresh store: count by listing, no schema to read
           if (Compaction.dataFilesUnder(fs, new Path(prevDir)).isEmpty) 0L

@@ -312,24 +312,43 @@ object GraftStore {
       val out = fs.create(p, true)
       try out.write(bytes) finally out.close()
     } else {
+      // the local filesystem keeps a `.crc` beside each file and moves the
+      // pair with two renames (a reader between them pairs new bytes with
+      // the old checksum, fails, and gets the file moved aside as corrupt),
+      // and its OVERWRITE rename deletes the destination first. Metadata
+      // objects are a few bytes: there, write them unchecksummed, drop a
+      // stale checksum, and swap with ONE POSIX rename — a reader sees the
+      // old bytes or the new ones, never none
+      val local = fs match {
+        case l: org.apache.hadoop.fs.LocalFileSystem => Some(l)
+        case _ => None
+      }
+      val wfs = local.fold(fs)(_.getRawFileSystem)
       val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
+      val out = wfs.create(tmp, true)
       try out.write(bytes) finally out.close()
-      // overwrite-rename through FileContext: atomic replace on HDFS too,
-      // where plain FileSystem.rename returns false on an existing
-      // destination — a delete-then-rename fallback there would open a
-      // crash window with NO live manifest (reads silently drop carried
-      // partitions; vacuum loses the references protecting their versions)
-      try {
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // no AbstractFileSystem binding (exotic scheme): POSIX-style
-          // FileSystems overwrite atomically on plain rename
-          require(fs.rename(tmp, p),
-            s"atomic rename $tmp -> $p failed and $p has no FileContext binding")
+      local match {
+        case Some(l) =>
+          wfs.delete(l.getChecksumFile(p), false)
+          require(wfs.rename(tmp, p), s"atomic rename $tmp -> $p failed")
+        case None =>
+          // overwrite-rename through FileContext: atomic replace on HDFS
+          // too, where plain FileSystem.rename returns false on an existing
+          // destination — a delete-then-rename fallback there would open a
+          // crash window with NO live manifest (reads silently drop carried
+          // partitions; vacuum loses the references protecting their
+          // versions)
+          try {
+            org.apache.hadoop.fs.FileContext
+              .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
+              .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+          } catch {
+            case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+              // no AbstractFileSystem binding (exotic scheme): POSIX-style
+              // FileSystems overwrite atomically on plain rename
+              require(fs.rename(tmp, p),
+                s"atomic rename $tmp -> $p failed and $p has no FileContext binding")
+          }
       }
     }
   }
@@ -1009,15 +1028,15 @@ object GraftStore {
   def currentVersion(spark: SparkSession, root: String): Int =
     readPointer(spark, root).stripPrefix("v").toInt
 
-  /** One atomic PUT: object-store writes publish all-or-nothing, which is
-    * the commit primitive this tier is built on. (On a plain filesystem this
-    * is create+overwrite — fine for tests; the tier targets object stores.)
+  /** One atomic publish: a single PUT on object stores (all-or-nothing,
+    * the commit primitive this tier is built on), temp + overwrite-rename
+    * everywhere else. A plain `create(overwrite)` truncates first, so a
+    * concurrent [[readPointer]] on a local or HDFS store could read an
+    * empty pointer mid-flip.
     */
-  def writePointer(spark: SparkSession, root: String, n: Int): Unit = {
-    val p = new Path(root, PointerName)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(versionPrefix(n).getBytes("UTF-8")) finally out.close()
-  }
+  def writePointer(spark: SparkSession, root: String, n: Int): Unit =
+    atomicWriteBytes(spark, new Path(root, PointerName),
+      versionPrefix(n).getBytes("UTF-8"))
 
   /** Compare-and-swap pointer flip: publish version `next` only if the
     * pointer STILL names `expected` at the instant of the write. On a

@@ -18,13 +18,23 @@ object LogIngest {
 
   /** Kubernetes CRI pod-log path grammar (reference fluent-bit.conf:12-14
     * `Tag_Regex`): `/var/log/pods/<namespace>_<pod>_<pod_uid>/<container>/N.log`.
+    *
+    * Both path patterns run per ROW through `rlike`/`regexp_extract`, which
+    * search with `Matcher.find` — a match may start anywhere in the path —
+    * so neither carries a leading `.*`. With one, every start position
+    * re-scans to the end of the path and backtracks: a FAILED search is
+    * quadratic in the path length, and the exclusion fails on every path
+    * that is not fluent-bit's own. Without it the literal `/pods/` anchors
+    * the search and the cost is linear. The results are identical: the
+    * grammar pins `/pods/` exactly three segments before the end, and the
+    * exclusion only asks whether some `/pods/<..fluent-bit..>/` occurs.
     */
-  val podPathRegex = ".*/pods/([^_/]+)_([^_/]+)_([^_/]+)/([^/]+)/[^/]+\\.log$"
+  val podPathRegex = "/pods/([^_/]+)_([^_/]+)_([^_/]+)/([^/]+)/[^/]+\\.log$"
 
   /** Path exclusion — fluent-bit excludes its own logs to avoid a feedback
-    * loop (fluent-bit.conf:15-16).
+    * loop (fluent-bit.conf:15-16). A `find` pattern (see [[podPathRegex]]).
     */
-  val defaultExcludeRegex = ".*/pods/[^/]*fluent-bit[^/]*/.*"
+  val defaultExcludeRegex = "/pods/[^/]*fluent-bit[^/]*/"
 
   /** Max line length guard ≙ `Skip_Long_Lines On` + 2M buffer cap
     * (fluent-bit.conf:18-20).
@@ -32,18 +42,29 @@ object LogIngest {
   val defaultMaxLineBytes = 2 * 1024 * 1024
 
   /** Read raw CRI files and produce the canonical log DataFrame with path
-    * metadata columns. `_metadata.file_path` is the hidden file-source column
-    * (stable under task retries, unlike `input_file_name` in some plans).
+    * metadata columns.
     */
   def readCri(spark: SparkSession, glob: String, clusterName: String,
       nodeName: String = "local-node",
       excludeRegex: String = defaultExcludeRegex,
+      maxLineBytes: Int = defaultMaxLineBytes): DataFrame =
+    criColumns(spark.read.text(glob), clusterName, nodeName, excludeRegex, maxLineBytes)
+      .withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
+      .withColumn("hour", date_format(col("time"), "HH"))
+
+  /** The one CRI read chain over a raw `text` source, batch or streaming:
+    * drop excluded files and over-long lines, parse, and derive the path
+    * columns. `_metadata.file_path` is the hidden file-source column
+    * (stable under task retries, unlike `input_file_name` in some plans).
+    */
+  private[logs] def criColumns(raw: DataFrame, clusterName: String,
+      nodeName: String, excludeRegex: String = defaultExcludeRegex,
       maxLineBytes: Int = defaultMaxLineBytes): DataFrame = {
-    val raw = spark.read.text(glob)
+    val kept = raw
       .withColumn("file_path", col("_metadata.file_path"))
       .filter(!col("file_path").rlike(excludeRegex))
       .filter(octet_length(col("value")) < maxLineBytes)
-    CriFunctions.parsed(raw, clusterName)
+    CriFunctions.parsed(kept, clusterName)
       .withColumn("namespace", regexp_extract(col("file_path"), podPathRegex, 1))
       .withColumn("pod", regexp_extract(col("file_path"), podPathRegex, 2))
       // group 3 = the pod UID (Tag_Regex captures it, fluent-bit.conf:12-14):
@@ -53,8 +74,6 @@ object LogIngest {
       .withColumn("pod_id", regexp_extract(col("file_path"), podPathRegex, 3))
       .withColumn("container", regexp_extract(col("file_path"), podPathRegex, 4))
       .withColumn("node", lit(nodeName))
-      .withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("time"), "HH"))
       .drop("file_path")
   }
 

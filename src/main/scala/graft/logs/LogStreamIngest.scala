@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object LogStreamIngest {
 
-  /** The shared stream-side read+parse chain (one definition: `start`,
-    * `startDualFormat`, and the batch `LogIngest.readCri` must not drift).
+  /** The stream-side read: the tail source plus [[LogIngest.criColumns]],
+    * the chain the batch `LogIngest.readCri` runs too.
     */
   private def parsedStream(spark: SparkSession, inputGlob: String,
       clusterName: String, nodeName: String, maxFilesPerTrigger: Int) = {
@@ -32,16 +32,7 @@ object LogStreamIngest {
       // stream, exactly like the reference's tail surviving file removal
       .option("ignoreMissingFiles", "true")
       .text(inputGlob)
-      .withColumn("file_path", col("_metadata.file_path"))
-      .filter(!col("file_path").rlike(LogIngest.defaultExcludeRegex))
-      .filter(octet_length(col("value")) < LogIngest.defaultMaxLineBytes)
-    CriFunctions.parsed(raw, clusterName)
-      .withColumn("namespace", regexp_extract(col("file_path"), LogIngest.podPathRegex, 1))
-      .withColumn("pod", regexp_extract(col("file_path"), LogIngest.podPathRegex, 2))
-      .withColumn("pod_id", regexp_extract(col("file_path"), LogIngest.podPathRegex, 3))
-      .withColumn("container", regexp_extract(col("file_path"), LogIngest.podPathRegex, 4))
-      .withColumn("node", lit(nodeName))
-      .drop("file_path")
+    LogIngest.criColumns(raw, clusterName, nodeName)
   }
 
   def start(spark: SparkSession, inputGlob: String, outputRoot: String,

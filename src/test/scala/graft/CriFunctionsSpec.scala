@@ -1,6 +1,6 @@
 package graft
 
-import graft.logs.CriFunctions
+import graft.logs.{CriFunctions, LogIngest}
 import org.apache.spark.sql.functions._
 
 /** CRI parse + nanosecond timestamp exactness — the reference's core
@@ -85,5 +85,36 @@ class CriFunctionsSpec extends SparkSpec {
       .select($"time_ns", $"stream", $"message").collect()
     assert(out.length == 2)
     assert(out.map(_.getLong(0)).toSeq == Seq(1705314645123456789L, 1705314646000000000L))
+  }
+
+  test("path patterns without a leading .* match exactly what the old ones did") {
+    // the patterns as first written, kept as the reference: `rlike` and
+    // `regexp_extract` search with `find`, so the leading `.*` only cost
+    // time (quadratic on a failed search), never changed a result
+    val oldPodPath = ".*/pods/([^_/]+)_([^_/]+)_([^_/]+)/([^/]+)/[^/]+\\.log$"
+    val oldExclude = ".*/pods/[^/]*fluent-bit[^/]*/.*"
+    val paths = Seq(
+      "file:///var/log/pods/default_api-1_u-1/app/0.log",
+      "/mnt/pods/x/var/log/pods/ns_pod_uid/c/0.log",            // nested /pods/ prefix
+      "/var/log/pods/kube-system_fluent-bit-abc12_u9/fluent-bit/0.log", // decoy pod
+      "/var/log/pods/logging_shipper_u3/fluent-bit/0.log",      // fluent-bit as container
+      "/var/log/pods/ns_pod_uid/c/0.log.20260115-062000",       // rotated
+      "/var/log/syslog/pods/app/c/0.log",                       // no underscores: not CRI
+      "/var/log/pods/a_b_c/d/e/0.log",                          // one segment too deep
+      "/var/log/pods/a_b_c_d/c/0.log",                          // extra underscore
+      "")
+    def eval(podPath: String, exclude: String) =
+      paths.toDF("p").select(
+        $"p".rlike(exclude).as("x") +:
+          (1 to 4).map(g => regexp_extract($"p", podPath, g).as(s"g$g")): _*)
+        .collect().map(_.toSeq).toSeq
+    val before = eval(oldPodPath, oldExclude)
+    val after = eval(LogIngest.podPathRegex, LogIngest.defaultExcludeRegex)
+    assert(after == before)
+    // and the reference answers are the intended ones
+    assert(after(1) == Seq(false, "ns", "pod", "uid", "c"))
+    assert(after(2).head == true && after(3).head == false)
+    assert(after(3).tail == Seq("logging", "shipper", "u3", "fluent-bit"))
+    assert(after(4).tail == Seq("", "", "", "") && after(5).tail == Seq("", "", "", ""))
   }
 }
